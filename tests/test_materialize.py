@@ -1,37 +1,48 @@
 """The scale-safe materialization policy (r13 verdict item 3).
 
 Every multiply-consumed frame in the operators/entries is pinned via
-``materialize.materialize``; these tests pin the policy switch itself:
+``materialize.materialize``; these tests pin how it picks a mechanism
+from the deployment:
 
-- default (``local``) mode IS ``localCheckpoint`` — lineage truncated
-  to an RDD scan, identical to the round-13 plans;
-- ``persist`` mode keeps lineage (an InMemoryRelation appears, the
-  source stays under it — recomputable on block loss, guide §5);
-- ``reliable`` mode writes a reliable checkpoint into the configured
-  dir and truncates lineage like ``local``;
-- results are identical across modes (the knob changes fault
+- a ``local``/``local[...]`` master IS ``localCheckpoint`` — lineage
+  truncated to an RDD scan, identical to the round-13 plans;
+- any other master writes a reliable checkpoint into the configured
+  dir and truncates lineage the same way (reached here by forcing the
+  ``_is_local`` predicate, since the suite runs in local mode);
+- results are identical on both branches (the mechanism changes fault
   tolerance, never values);
-- an unknown mode fails loudly, never silently degrades.
+- a configured checkpoint dir that disagrees with the one the context
+  already uses fails loudly instead of being silently ignored.
 """
 
 from __future__ import annotations
 
+import os
+import re
+from types import SimpleNamespace
+
 import pytest
 from pyspark.sql import functions as F
 
-from usgs_earthquake_data_pipeline_spark.materialize import (
-    CONF_KEY,
-    materialize,
-    materialize_mode,
-)
+from usgs_earthquake_data_pipeline_spark import materialize as M
+from usgs_earthquake_data_pipeline_spark.materialize import materialize
+
+
+def _checkpoint_dir(spark):
+    d = spark.sparkContext._jsc.sc().getCheckpointDir()
+    return d.get() if d.isDefined() else None
 
 
 @pytest.fixture
-def mode_conf(spark):
-    """Restore the session's materialize mode after each test (the
-    suite's session is shared)."""
+def reliable(spark, monkeypatch):
+    """Force the non-local branch with a context that has no checkpoint
+    dir yet; restore the shared session afterwards."""
+    monkeypatch.setattr(M, "_is_local", lambda sc: False)
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.setCheckpointDir(None)
     yield spark
-    spark.conf.unset(CONF_KEY)
+    spark.conf.unset(M.DIR_CONF_KEY)
+    jsc.setCheckpointDir(None)
 
 
 def _df(spark):
@@ -41,66 +52,58 @@ def _df(spark):
 
 
 def test_default_mode_is_local(spark):
-    assert materialize_mode(spark) == "local"
+    assert M._is_local(spark.sparkContext)
+    for master in ("local", "local[4]", "local[*]", "local[2,3]"):
+        assert M._is_local(SimpleNamespace(master=master)), master
+    for master in ("local-cluster[2,1,1024]", "spark://h:7077", "yarn"):
+        assert not M._is_local(SimpleNamespace(master=master)), master
 
 
-def test_local_truncates_lineage(mode_conf):
-    spark = mode_conf
-    spark.conf.set(CONF_KEY, "local")
+def test_local_truncates_lineage(spark):
     out = materialize(_df(spark), eager=True)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Scan ExistingRDD" in plan
     assert "Range" not in plan  # source subtree gone — lineage cut
+    assert _checkpoint_dir(spark) is None  # no reliable checkpoint taken
 
 
-def test_persist_keeps_lineage(mode_conf):
-    spark = mode_conf
-    spark.conf.set(CONF_KEY, "persist")
-    df = _df(spark)
-    out = materialize(df, eager=True)
-    try:
-        plan = out._jdf.queryExecution().withCachedData().toString()
-        assert "InMemoryRelation" in plan
-        # lineage retained: the source Range sits under the cache, so
-        # a lost block recomputes instead of failing the job
-        assert "Range" in plan
-        assert out.storageLevel.useDisk and out.storageLevel.useMemory
-    finally:
-        out.unpersist()
-
-
-def test_reliable_checkpoints_to_dir(mode_conf, tmp_path):
-    spark = mode_conf
-    spark.conf.set(CONF_KEY, "reliable")
-    spark.conf.set(
-        "spark.graft.checkpoint.dir", str(tmp_path / "ckpt")
-    )
+def test_reliable_checkpoints_to_dir(reliable, tmp_path):
+    spark = reliable
+    target = tmp_path / "ckpt"
+    spark.conf.set(M.DIR_CONF_KEY, str(target))
     out = materialize(_df(spark), eager=True)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Scan ExistingRDD" in plan
-    ckpt_dir = spark.sparkContext._jsc.sc().getCheckpointDir()
-    assert ckpt_dir.isDefined()
-    # NOTE: setCheckpointDir is once-per-context in practice (a shared
-    # test session may have pinned it already); the mode contract is
-    # "a reliable dir exists and the checkpoint succeeded", which the
-    # Defined check plus the materialized result pin.
+    assert "Range" not in plan
+    # the context's dir is a fresh subdir of the configured one, and the
+    # eager checkpoint wrote its RDD files there
+    (sub,) = os.listdir(target)
+    assert _checkpoint_dir(spark).endswith(f"{target}/{sub}")
+    assert any(n.startswith("rdd-") for n in os.listdir(target / sub))
     assert out.count() == 100
 
 
-def test_results_identical_across_modes(mode_conf):
-    spark = mode_conf
+def test_results_identical_across_modes(reliable, monkeypatch):
+    spark = reliable
     expected = sorted(r.id for r in _df(spark).collect())
-    for mode in ("local", "persist", "reliable"):
-        spark.conf.set(CONF_KEY, mode)
+    for local in (True, False):
+        monkeypatch.setattr(M, "_is_local", lambda sc, v=local: v)
         out = materialize(_df(spark), eager=False)
         got = sorted(r.id for r in out.collect())
-        assert got == expected, mode
-        if mode == "persist":
-            out.unpersist()
+        assert got == expected, local
 
 
-def test_unknown_mode_fails_loudly(mode_conf):
-    spark = mode_conf
-    spark.conf.set(CONF_KEY, "everywhere")
-    with pytest.raises(ValueError, match="everywhere"):
+def test_checkpoint_dir_conflict_fails_loudly(reliable, tmp_path):
+    spark = reliable
+    first, other = tmp_path / "a", tmp_path / "b"
+    spark.conf.set(M.DIR_CONF_KEY, str(first))
+    materialize(_df(spark))
+    pinned = _checkpoint_dir(spark)
+    # the same dir again is fine: the context keeps its subdir
+    assert materialize(_df(spark)).count() == 100
+    assert _checkpoint_dir(spark) == pinned
+    spark.conf.set(M.DIR_CONF_KEY, str(other))
+    names_both = re.escape(str(other)) + ".*" + re.escape(str(first))
+    with pytest.raises(ValueError, match=names_both):
         materialize(_df(spark))
+    assert _checkpoint_dir(spark) == pinned

@@ -4,7 +4,10 @@ all driven by an injected fake transport (no network)."""
 
 from __future__ import annotations
 
+import copy
+import glob
 import json
+import os
 import urllib.parse
 
 import pytest
@@ -13,6 +16,7 @@ from usgs_earthquake_data_pipeline_spark import pipeline, sinks
 from usgs_earthquake_data_pipeline_spark.sources.rest import (
     FetchError,
     fetch_earthquake_data,
+    fetch_earthquake_data_by_limit,
     fetch_earthquake_data_limit_offset,
 )
 
@@ -37,11 +41,16 @@ def _page(features):
 
 
 class FakeApi:
-    """Serves deterministic pages keyed by (starttime, offset)."""
+    """Serves deterministic pages keyed by (starttime, offset).
+    ``fail_windows`` always fail; each ``(starttime, offset)`` in
+    ``fail_pages`` fails once (a transient 5xx)."""
 
-    def __init__(self, pages_by_window, fail_windows=None, fail_status=503):
+    def __init__(
+        self, pages_by_window, fail_windows=None, fail_status=503, fail_pages=None
+    ):
         self.pages_by_window = pages_by_window
         self.fail_windows = set(fail_windows or [])
+        self.fail_pages = set(fail_pages or [])
         self.fail_status = fail_status
         self.calls = []
 
@@ -52,6 +61,9 @@ class FakeApi:
         limit = int(q.get("limit", ["10"])[0])
         self.calls.append((start, offset))
         if start in self.fail_windows:
+            return self.fail_status, ""
+        if (start, offset) in self.fail_pages:
+            self.fail_pages.discard((start, offset))
             return self.fail_status, ""
         feats = self.pages_by_window.get(start, [])
         page = feats[offset - 1 : offset - 1 + limit]
@@ -71,6 +83,22 @@ def test_rest_source_limit_offset_raises_classified():
         )
     assert exc.value.status == 503
     assert pipeline.is_retryable(exc.value)
+
+
+def test_rest_source_by_limit_is_newest_n_without_time_range():
+    urls = []
+
+    def ok(url):
+        urls.append(url)
+        return 200, _page([_feature(1), _feature(2)])
+
+    doc = fetch_earthquake_data_by_limit("http://x", 2, ok)
+    assert [f["id"] for f in doc["features"]] == ["ev00000001", "ev00000002"]
+    (url,) = urls
+    q = urllib.parse.parse_qs(urllib.parse.urlparse(url).query)
+    assert q == {"format": ["geojson"], "limit": ["2"]}  # no time range
+
+    assert fetch_earthquake_data_by_limit("http://x", 2, lambda u: (503, "")) == {}
 
 
 def test_month_and_week_windows():
@@ -106,8 +134,6 @@ def test_empty_window_no_write(spark, tmp_path):
         limit=10, http_get=api,
     )
     assert total == 0
-    import os
-
     assert not os.path.exists(bronze)  # F3: empty input never writes
 
 
@@ -135,6 +161,44 @@ def test_week_fallback_on_month_failure(spark, tmp_path):
     assert ("2020-01-01", "2020-01-08") in stats.failed_windows
     assert stats.events == 3
     assert sinks.read_partitioned_table(spark, bronze).count() == 3
+
+
+def test_failed_window_leaves_bronze_and_stats_untouched(spark, tmp_path):
+    """A window whose page 2 fails after page 1 landed in staging is
+    atomic: FetchError propagates, bronze is never created, the stats
+    passed in are unchanged and the staging dir is gone. The month's
+    week retry then lands every event exactly once."""
+    feats = [_feature(i) for i in range(15)]
+    api = FakeApi({"2020-01-01": feats}, fail_pages={("2020-01-01", 11)})
+    bronze = str(tmp_path / "bronze")
+    stats = pipeline.IngestStats(pages=2, events=7, window_metrics=[{"rows": 7}])
+    before = copy.deepcopy(stats)
+    with pytest.raises(FetchError):
+        pipeline.ingest_window_paged(
+            spark, "http://x", "2020-01-01", "2020-02-01", bronze,
+            limit=10, http_get=api, stats=stats,
+        )
+    assert api.calls == [("2020-01-01", 1), ("2020-01-01", 11)]
+    assert not os.path.exists(bronze)
+    assert stats == before
+    assert not glob.glob(str(tmp_path / "*__staging_*"))
+
+    # the same transient failure through the range loop: the month
+    # fails on page 2, its first week re-fetches both pages
+    api = FakeApi({"2020-01-01": feats}, fail_pages={("2020-01-01", 11)})
+    orig = pipeline.month_windows
+    pipeline.month_windows = lambda s, e: [("2020-01-01", "2020-02-01")]
+    try:
+        stats = pipeline.ingest_range(
+            spark, 2020, 2020, bronze, api_url="http://x", limit=10, http_get=api
+        )
+    finally:
+        pipeline.month_windows = orig
+    assert stats.failed_windows == []
+    assert stats.events == 15 and stats.pages == 2
+    ids = [r.id for r in sinks.read_partitioned_table(spark, bronze).collect()]
+    assert sorted(ids) == sorted(f["id"] for f in feats)  # each exactly once
+    assert not glob.glob(str(tmp_path / "*__staging_*"))
 
 
 def test_idempotent_reingest_no_duplicates(spark, tmp_path):

@@ -135,6 +135,25 @@ def test_silver_sql_twins_match_dataframe_api(spark, events):
     assert sql_monthly == df_monthly
 
 
+def test_silver_event_counts_a1_a2(spark, events):
+    """A1 (count in one year) and A2 (count per year): DataFrame and
+    spark.sql forms agree with each other and with hand counts of the
+    fixture (year = 2020 + i % 3 over i < 200)."""
+    events.createOrReplaceTempView("usgs_events")
+    want = [(2020, 67), (2021, 67), (2022, 66)]
+    by_year_df = [tuple(r) for r in silver.count_events_by_year(events).collect()]
+    by_year_sql = [
+        tuple(r) for r in spark.sql(silver.SILVER_SQL["count_by_year"]).collect()
+    ]
+    assert by_year_df == by_year_sql == want
+    for year, cnt in want + [(2019, 0)]:
+        (df_row,) = silver.count_events_in_year(events, year).collect()
+        (sql_row,) = spark.sql(
+            silver.SILVER_SQL["count_in_year"].format(year=year)
+        ).collect()
+        assert df_row.cnt == sql_row.cnt == cnt, year
+
+
 def test_driver_events_table_silver(spark, sf_dir, tmp_path):
     """Silver aggregations also run over the driver's events table
     mapped to bronze shape (year/month derived, flag from type)."""

@@ -24,7 +24,7 @@ SMALL sf, then one timed pass small -> big interleaved per op. One
 pass each — a ratio smoke, not a latency record.
 
 Usage: python tools/ann_scale_smoke.py [SMALL_DIR BIG_DIR]
-Defaults: /root/repo/tmp_scale/{sf1,sf10} (embeddings table only is
+Defaults: <repo root>/tmp_scale/{sf1,sf10} (embeddings table only is
 needed; generate with ``gen_testdata.py 10 tmp_scale/sf10
 embeddings``). Index parquet goes under <dir>/ann_index_smoke and is
 overwritten per run.
@@ -38,7 +38,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 N_LISTS = 64
 N_PROBE = 4
@@ -51,8 +52,8 @@ def main() -> None:
     if len(argv) == 2:
         small, big = argv
     elif not argv:
-        small = "/root/repo/tmp_scale/sf1"
-        big = "/root/repo/tmp_scale/sf10"
+        small = os.path.join(REPO, "tmp_scale", "sf1")
+        big = os.path.join(REPO, "tmp_scale", "sf10")
     else:
         raise SystemExit("usage: ann_scale_smoke.py [SMALL_DIR BIG_DIR]")
 

@@ -7,10 +7,12 @@ convergence guard. Not part of the package; safe to delete.
 Usage: python tools/cc_chain_rung.py [n_nodes=1000000]
 """
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F
 

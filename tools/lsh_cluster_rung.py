@@ -13,10 +13,12 @@ then interleaved small/big passes; prints per-stage seconds.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def run(spark, sf_dir: str) -> dict:

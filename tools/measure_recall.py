@@ -2,9 +2,11 @@
 entries vs their exact twins at each SF, to pick driver-gate thresholds
 (round-11 item 1). Not part of the package; safe to delete."""
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F
 

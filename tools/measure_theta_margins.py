@@ -9,9 +9,11 @@ bound. Not part of the package; safe to delete.
 Usage: python tools/measure_theta_margins.py [sf_root=/root/testdata]
 """
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import duckdb
 

@@ -12,7 +12,7 @@ box drift spreads evenly. One pass each — this is a ratio smoke, not
 a latency record (bench.py owns those).
 
 Usage: python tools/sf1_smoke.py [SMALL_DIR BIG_DIR] [--entries a,b,c]
-Defaults: /root/repo/tmp_scale/{sf0.1g,sf1}; --entries restricts the
+Defaults: <repo root>/tmp_scale/{sf0.1g,sf1}; --entries restricts the
 run to the named catalog entries (round-12: the sf1->sf10 rung runs
 the 5 heaviest document-table headliners only — the docs-only sf10
 dir has no other tables).
@@ -21,10 +21,12 @@ dir has no other tables).
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def main() -> None:
@@ -40,8 +42,8 @@ def main() -> None:
     if len(argv) == 2:
         small, big = argv
     elif not argv:
-        small = "/root/repo/tmp_scale/sf0.1g"
-        big = "/root/repo/tmp_scale/sf1"
+        small = os.path.join(REPO, "tmp_scale", "sf0.1g")
+        big = os.path.join(REPO, "tmp_scale", "sf1")
     else:
         # one stray operand would silently measure the DEFAULT dirs —
         # fail loud instead (round-11 review)

@@ -1,38 +1,22 @@
-"""Scale-safe materialization policy for multiply-consumed frames.
+"""Scale-safe materialization for multiply-consumed frames.
 
-Round 13 removed hundreds of redundant subtree evaluations by pinning
-multiply-consumed DataFrames with ``localCheckpoint``. That is the
-right mechanism in local mode (one process; RDD blocks live on the
-driver's own disks), but ``localCheckpoint`` both truncates lineage
-AND stores blocks non-replicated on executor-local storage: on a real
-cluster, losing one executor after materialization fails the job
-instead of recomputing the lost partitions (optimization guide §5 —
-the r13 verdict's item 1). The fix is a policy knob, not a different
-plan: every operator/entry that pins a frame funnels through
-:func:`materialize`, which picks the mechanism from session conf.
+Every operator/entry that pins a frame so its subtree executes once
+funnels through :func:`materialize`. Both mechanisms it can pick
+truncate lineage, so long iterative loops stay bounded either way;
+they differ only in where the blocks live, which is a property of the
+deployment, and Spark already knows the deployment:
 
-Modes (``spark.graft.materialize.mode`` session conf, env fallback
-``SPARK_GRAFT_MATERIALIZE``; default ``local``):
-
-- ``local`` — ``df.localCheckpoint(eager)``. The bench/test mode;
-  plans, scan counts and timings identical to the round-13 tree.
-- ``reliable`` — ``df.checkpoint(eager)`` against the reliable
-  checkpoint dir (HDFS/S3 on a cluster: set
-  ``spark.graft.checkpoint.dir`` or ``SPARK_GRAFT_CHECKPOINT_DIR``;
-  defaults to a per-process temp dir so the mode is testable
-  locally). Blocks survive executor loss; lineage still truncated,
-  so very long iterative lineages stay bounded.
-- ``persist`` — ``df.persist(MEMORY_AND_DISK)`` keeping lineage: a
-  lost cache block recomputes from source instead of failing the
-  job. The plan gains an InMemoryRelation (scan counts at the leaves
-  are unchanged — the source subtree remains under it). ``eager``
-  persist is forced with one ``count()`` action, mirroring eager
-  checkpoint semantics.
-
-Why a *session* conf and not a per-call argument: the right mode is a
-property of the deployment (local bench vs cluster), not of any one
-operator — one switch must flip every pin at once, which is exactly
-what the r13 verdict asked for ("a session-level policy knob").
+- a ``local`` / ``local[...]`` master — ``df.localCheckpoint(eager)``.
+  One process: the blocks sit on the driver's own disks, so nothing
+  is lost that the job would survive anyway. The plan is a
+  ``Scan ExistingRDD`` with no source subtree.
+- any other master (``local-cluster`` included) — a reliable
+  ``df.checkpoint(eager)``. ``localCheckpoint`` stores blocks
+  non-replicated on executor-local storage, so on a cluster losing
+  one executor after materialization would fail the job instead of
+  recomputing the lost partitions (optimization guide §5). The
+  checkpoint goes to ``spark.graft.checkpoint.dir`` (HDFS/S3 on a
+  cluster); unset, to a per-process scratch dir.
 """
 
 from __future__ import annotations
@@ -40,46 +24,40 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame
-from pyspark.storagelevel import StorageLevel
 
-CONF_KEY = "spark.graft.materialize.mode"
 DIR_CONF_KEY = "spark.graft.checkpoint.dir"
-_VALID = ("local", "reliable", "persist")
 
 
-def materialize_mode(spark) -> str:
-    """Resolve the active materialization mode: session conf first,
-    then the SPARK_GRAFT_MATERIALIZE env var, default ``local``."""
-    mode = None
-    try:
-        mode = spark.conf.get(CONF_KEY, None)
-    except Exception:  # pragma: no cover - conf access locked down
-        mode = None
-    if not mode:
-        mode = os.environ.get("SPARK_GRAFT_MATERIALIZE", "local")
-    if mode not in _VALID:
-        raise ValueError(
-            f"{CONF_KEY}={mode!r}: expected one of {', '.join(_VALID)}"
-        )
-    return mode
+def _is_local(sc) -> bool:
+    """Spark's own notion of a single-process master
+    (``SparkContext.isLocal``): ``local`` or ``local[...]``."""
+    return sc.master == "local" or sc.master.startswith("local[")
 
 
 def _ensure_checkpoint_dir(spark) -> None:
-    """Reliable mode needs ``sc.setCheckpointDir`` before the first
-    ``df.checkpoint()``. Honors spark.graft.checkpoint.dir /
-    SPARK_GRAFT_CHECKPOINT_DIR; falls back to a per-process scratch
-    subdir so the mode runs (and is tested) locally."""
+    """A reliable checkpoint needs ``sc.setCheckpointDir`` before the
+    first ``df.checkpoint()``. Uses spark.graft.checkpoint.dir, else a
+    per-process scratch subdir. A context already pinned to a
+    different dir than the configured one is an error, never silently
+    kept."""
     sc = spark.sparkContext
+    target = spark.conf.get(DIR_CONF_KEY, None)
     current = sc._jsc.sc().getCheckpointDir()
     if current.isDefined():
+        if target:
+            # setCheckpointDir pins a fresh UUID subdir of the
+            # qualified target; compare against that subdir's parent
+            hpath = sc._jvm.org.apache.hadoop.fs.Path
+            want = hpath(target)
+            fs = want.getFileSystem(sc._jsc.hadoopConfiguration())
+            want = fs.makeQualified(want).toString()
+            have = hpath(current.get()).getParent().toString()
+            if have != want:
+                raise ValueError(
+                    f"{DIR_CONF_KEY}={target!r} differs from the "
+                    f"context's existing checkpoint dir {have!r}"
+                )
         return
-    target = None
-    try:
-        target = spark.conf.get(DIR_CONF_KEY, None)
-    except Exception:  # pragma: no cover
-        target = None
-    if not target:
-        target = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
     if not target:
         from .session import _scratch_dir
 
@@ -89,26 +67,18 @@ def _ensure_checkpoint_dir(spark) -> None:
 
 def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
     """Pin a multiply-consumed DataFrame so its subtree executes once,
-    using the session's configured mechanism (module docstring).
+    with the mechanism the deployment calls for (module docstring).
 
-    Drop-in replacement for the bare ``df.localCheckpoint(eager)``
-    calls round 13 introduced: in the default ``local`` mode it IS
-    that call, byte-for-byte the same plan."""
-    mode = materialize_mode(df.sparkSession)
-    if mode == "local":
+    In local mode it IS ``df.localCheckpoint(eager)``, byte-for-byte
+    the same plan as a bare call."""
+    spark = df.sparkSession
+    if _is_local(spark.sparkContext):
         return df.localCheckpoint(eager=eager)
-    if mode == "reliable":
-        _ensure_checkpoint_dir(df.sparkSession)
-        return df.checkpoint(eager=eager)
-    # persist: lineage retained — recomputable on block loss (§5)
-    out = df.persist(StorageLevel.MEMORY_AND_DISK)
-    if eager:
-        out.count()
-    return out
+    _ensure_checkpoint_dir(spark)
+    return df.checkpoint(eager=eager)
 
 
 def materialize_lazy(df: DataFrame) -> DataFrame:
     """:func:`materialize` with ``eager=False`` — chainable via
-    ``df.transform(materialize_lazy)``, the drop-in for the round-13
-    ``.localCheckpoint(eager=False)`` call sites."""
+    ``df.transform(materialize_lazy)``."""
     return materialize(df, eager=False)

@@ -17,7 +17,6 @@ uses.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -33,23 +32,6 @@ def quality_metrics() -> list:
         F.min("eventtime").alias("min_eventtime"),
         F.max("eventtime").alias("max_eventtime"),
     ]
-
-
-def with_quality_observation(
-    df: DataFrame, name: str = "bronze_window"
-) -> tuple[DataFrame, Observation]:
-    """Attach the standard quality counters to ``df``. The returned
-    DataFrame must flow into exactly one action; read
-    ``observation.get`` after that action completes.
-
-    ``Observation.get`` captures the FIRST action that executes the
-    CollectMetrics node — so never attach upstream of a sink that
-    probes the DataFrame first (``isEmpty`` is a limit-1 partial scan
-    and would capture rows=0/1). The partitioned sinks instead take
-    ``observation``/``metrics`` parameters and attach them after
-    their probes, immediately before the write action."""
-    obs = Observation(name)
-    return df.observe(obs, *quality_metrics()), obs
 
 
 class StreamingMetricsListener:

@@ -389,12 +389,22 @@ def dedup_resolve_clusters_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     cb = exact_clusters.select(
         F.col("id").alias("id_b"), F.col("canonical_id").alias("can_b")
     )
+    # left joins: an LSH edge whose endpoint has no exact label is a
+    # violation (fail closed), never silently dropped from the check
     refine = (
-        lsh.join(ca, "id_a")
-        .join(cb, "id_b")
+        lsh.join(ca, "id_a", "left")
+        .join(cb, "id_b", "left")
         .agg(
             (
-                F.count(F.when(F.col("can_a") != F.col("can_b"), 1)) == 0
+                F.count(
+                    F.when(
+                        F.col("can_a").isNull()
+                        | F.col("can_b").isNull()
+                        | (F.col("can_a") != F.col("can_b")),
+                        1,
+                    )
+                )
+                == 0
             ).alias("clusters_refine_exact_ok")
         )
     )
@@ -2570,8 +2580,9 @@ def ann_pq_adc_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
     broken codebooks, mis-indexed lookups, or subspace slicing bugs.
     The hashed payload is the EXACT L2 top-5 per query (SQL twin:
     DuckDB list_distance) plus `adc_identity_ok` = the max deviation
-    of the identity over ALL (query, corpus) pairs stayed < 1e-5 at
-    6-dp precision; the oracle emits the same exact rows + TRUE. All
+    of the identity over ALL non-self (query, corpus) pairs stayed
+    < 1e-5 at 6-dp precision, with a pair missing from either side a
+    violation; the oracle emits the same exact rows + TRUE. All
     distributed: the identity check is one broadcast cross join and
     one agg — no driver-side row iteration."""
     from ..operators import pq as PQ
@@ -2597,16 +2608,33 @@ def ann_pq_adc_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"),
         F.col("embedding").cast("array<double>").alias("qv"),
     )
-    ref = recon.crossJoin(F.broadcast(q)).select(
-        "query_id",
-        "neighbor_id",
-        F.round(_l2_sq(F.col("qv"), F.col("rv")), 6).alias("ref_dist"),
+    # every corpus row but the query itself — pq_adc_scores' pair set
+    ref = (
+        recon.crossJoin(F.broadcast(q))
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .select(
+            "query_id",
+            "neighbor_id",
+            F.round(_l2_sq(F.col("qv"), F.col("rv")), 6).alias("ref_dist"),
+        )
     )
+    # full join: a (query, corpus) pair either side lost is a
+    # violation (fail closed), never silently dropped from the check
     ok = (
-        est.join(ref, ["query_id", "neighbor_id"])
+        est.join(ref, ["query_id", "neighbor_id"], "full")
         .agg(
             (
-                F.max(F.abs(F.col("est_dist") - F.col("ref_dist"))) < 1e-5
+                (
+                    F.count(
+                        F.when(
+                            F.col("est_dist").isNull()
+                            | F.col("ref_dist").isNull(),
+                            1,
+                        )
+                    )
+                    == 0
+                )
+                & (F.max(F.abs(F.col("est_dist") - F.col("ref_dist"))) < 1e-5)
             ).alias("adc_identity_ok")
         )
     )

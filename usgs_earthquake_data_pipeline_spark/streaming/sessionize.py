@@ -17,6 +17,7 @@ validate the streaming operator, and as the backfill path.
 from __future__ import annotations
 
 from collections.abc import Iterator
+from functools import partial
 
 import pandas as pd
 from pyspark.sql import DataFrame, Window
@@ -51,6 +52,64 @@ _STATE_SCHEMA = StructType(
 )
 
 
+def _fold(
+    gap_us: int, key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
+) -> Iterator[pd.DataFrame]:
+    """Per-key state transition of :func:`sessionize_stream` (bound to
+    its gap with ``functools.partial``): on a timeout, emit and drop the
+    open session; otherwise fold the key's new events into it, emitting
+    every session an in-batch gap closes, and re-arm the timeout at
+    ``session_end + gap``."""
+    (user_id,) = key
+    rows = pd.concat(list(pdfs), ignore_index=True)
+    closed: list[tuple] = []
+    if state.hasTimedOut:
+        if state.exists:
+            s_us, e_us, n, sv = state.get
+            closed.append((user_id, s_us, e_us, n, sv))
+            state.remove()
+    else:
+        rows = rows.sort_values("ts")
+        ts_us = (rows["ts"].astype("int64") // 1000).tolist()
+        vals = rows["value"].tolist()
+        if state.exists:
+            s_us, e_us, n, sv = state.get
+        else:
+            s_us = e_us = None  # type: ignore[assignment]
+            n, sv = 0, 0.0
+        for t, v in zip(ts_us, vals):
+            if s_us is None:
+                s_us, e_us, n, sv = t, t, 1, float(v or 0.0)
+            elif t - e_us <= gap_us:
+                # in-watermark late arrival: an event from an
+                # earlier micro-batch may precede the open
+                # session's frontier — extend the interval, never
+                # shrink it (a bare e_us = t would move the
+                # session end, and its timeout, backwards)
+                s_us, e_us = min(s_us, t), max(e_us, t)
+                n, sv = n + 1, sv + float(v or 0.0)
+            else:
+                closed.append((user_id, s_us, e_us, n, sv))
+                s_us, e_us, n, sv = t, t, 1, float(v or 0.0)
+        if s_us is not None:
+            state.update((int(s_us), int(e_us), int(n), float(sv)))
+            state.setTimeoutTimestamp((e_us + gap_us) // 1000)
+    if closed:
+        out = pd.DataFrame(
+            closed,
+            columns=["user_id", "start_us", "end_us", "n_events", "sum_value"],
+        )
+        yield pd.DataFrame(
+            {
+                "user_id": out["user_id"].astype("int64"),
+                "session_start": pd.to_datetime(out["start_us"], unit="us"),
+                "session_end": pd.to_datetime(out["end_us"], unit="us"),
+                "n_events": out["n_events"].astype("int32"),
+                "sum_value": out["sum_value"].astype("float64"),
+            }
+        )
+
+
 def sessionize_stream(
     events: DataFrame,
     *,
@@ -63,65 +122,11 @@ def sessionize_stream(
     watermark passes the session end + gap). Input must be a streaming
     DataFrame with columns user_id/ts/value.
     """
-    gap_us = gap_seconds * 1_000_000
-
-    def update(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        closed: list[tuple] = []
-        if state.hasTimedOut:
-            if state.exists:
-                s_us, e_us, n, sv = state.get
-                closed.append((user_id, s_us, e_us, n, sv))
-                state.remove()
-        else:
-            rows = rows.sort_values("ts")
-            ts_us = (rows["ts"].astype("int64") // 1000).tolist()
-            vals = rows["value"].tolist()
-            if state.exists:
-                s_us, e_us, n, sv = state.get
-            else:
-                s_us = e_us = None  # type: ignore[assignment]
-                n, sv = 0, 0.0
-            for t, v in zip(ts_us, vals):
-                if s_us is None:
-                    s_us, e_us, n, sv = t, t, 1, float(v or 0.0)
-                elif t - e_us <= gap_us:
-                    # in-watermark late arrival: an event from an
-                    # earlier micro-batch may precede the open
-                    # session's frontier — extend the interval, never
-                    # shrink it (a bare e_us = t would move the
-                    # session end, and its timeout, backwards)
-                    s_us, e_us = min(s_us, t), max(e_us, t)
-                    n, sv = n + 1, sv + float(v or 0.0)
-                else:
-                    closed.append((user_id, s_us, e_us, n, sv))
-                    s_us, e_us, n, sv = t, t, 1, float(v or 0.0)
-            if s_us is not None:
-                state.update((int(s_us), int(e_us), int(n), float(sv)))
-                state.setTimeoutTimestamp((e_us + gap_us) // 1000)
-        if closed:
-            out = pd.DataFrame(
-                closed,
-                columns=["user_id", "start_us", "end_us", "n_events", "sum_value"],
-            )
-            yield pd.DataFrame(
-                {
-                    "user_id": out["user_id"].astype("int64"),
-                    "session_start": pd.to_datetime(out["start_us"], unit="us"),
-                    "session_end": pd.to_datetime(out["end_us"], unit="us"),
-                    "n_events": out["n_events"].astype("int32"),
-                    "sum_value": out["sum_value"].astype("float64"),
-                }
-            )
-
     return (
         events.withWatermark("ts", watermark)
         .groupBy("user_id")
         .applyInPandasWithState(
-            update,
+            partial(_fold, gap_seconds * 1_000_000),
             outputStructType=SESSION_SCHEMA,
             stateStructType=_STATE_SCHEMA,
             outputMode="append",
